@@ -4,8 +4,10 @@ import graft.langid.{CharLM, NGramLangId}
 import graft.pipeline.{Transcripts, TranscriptPipeline}
 
 /** Dev tool: single-thread cost breakdown of the pipeline's per-row
-  * kernels (normalize / scrub / langid / perplexity / metrics), to know
-  * where the next optimization belongs.
+  * kernels (normalize / scrub / langid / perplexity / metrics), plus the
+  * compiled SQL-path char-class counters (`charclass`: the five
+  * `TextFunctions` counters over one row's UTF8String), to know where the
+  * next optimization belongs.
   *
   * usage: sbt "runMain graft.Profile [nRows]"
   */
@@ -25,22 +27,31 @@ object Profile {
       .take(n)
     spark.stop()
 
-    def bench(name: String)(f: String => Unit): Unit = {
+    def bench[A](name: String, xs: Seq[A])(f: A => Unit): Unit = {
       // warm
-      rows.iterator.take(n / 10).foreach(t => f(t.text))
+      xs.iterator.take(n / 10).foreach(f)
       val t0 = System.nanoTime()
-      rows.foreach(t => f(t.text))
+      xs.foreach(f)
       val sec = (System.nanoTime() - t0) / 1e9
-      println(f"$name%-12s ${rows.length / sec}%,.0f rows/s  (${sec * 1e9 / rows.length}%,.0f ns/row)")
+      println(f"$name%-12s ${xs.length / sec}%,.0f rows/s  (${sec * 1e9 / xs.length}%,.0f ns/row)")
     }
 
+    val texts = rows.map(_.text).toSeq
     val scorer = new TranscriptPipeline.TurnScorer(nm, lm)
-    bench("normalize")(s => graft.text.Normalize.newlines(s))
-    bench("scrub_pii")(s => graft.text.Scrub.scrubPiiCounting(s))
-    bench("langid")(s => nm.predictWithConfLower(s.toLowerCase))
-    bench("perplexity")(s => lm.perplexityLower(s.toLowerCase, 0))
-    bench("metrics")(s => graft.quality.Metrics.of(s))
-    bench("lowercase")(s => s.toLowerCase)
+    bench("normalize", texts)(s => graft.text.Normalize.newlines(s))
+    bench("scrub_pii", texts)(s => graft.text.Scrub.scrubPiiCounting(s))
+    bench("langid", texts)(s => nm.predictWithConfLower(s.toLowerCase))
+    bench("perplexity", texts)(s => lm.perplexityLower(s.toLowerCase, 0))
+    bench("metrics", texts)(s => graft.quality.Metrics.of(s))
+    bench("lowercase", texts)(s => s.toLowerCase)
+    val utf8 = texts.map(org.apache.spark.unsafe.types.UTF8String.fromString)
+    var sink = 0L
+    bench("charclass", utf8) { u =>
+      import graft.plans.AsciiClassCount._
+      sink += count(u, Letter, false) + count(u, Digit, false) + count(u, Space, false) +
+        count(u, Letter | Digit | Space, true) + count(u, Newline, false)
+    }
+    if (sink < 0) println(sink)
     val t0 = System.nanoTime()
     rows.foreach(t => scorer.score(t, 0L))
     val sec = (System.nanoTime() - t0) / 1e9

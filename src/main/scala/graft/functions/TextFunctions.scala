@@ -3,34 +3,47 @@ package graft.functions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
-/** SQL-expressible text-analysis helpers built from codegen'd built-ins
-  * (no UDFs in these paths — they stay inside WholeStageCodegen and their
-  * filters can still be reordered by Catalyst).
+/** SQL-expressible text-analysis helpers: codegen'd built-ins plus the
+  * compiled expressions of graft.plans (no UDFs in these paths — they
+  * stay inside WholeStageCodegen and their filters can still be
+  * reordered by Catalyst).
   *
   * ASCII char-class variants mirror the reference's metric semantics
   * (`create_stack_snippets.py:144-175`) for ASCII corpora where they are
   * DuckDB-oracle-checkable; the Unicode-exact versions live in
-  * graft.quality.Metrics (typed path).
+  * graft.quality.Metrics (typed path). The class counters and
+  * `lineCount` are native byte scans (`graft.plans.AsciiClassCount`), one
+  * pass per counter, value-identical to the regexp forms the oracle SQL
+  * spells out: `length(c) - length(regexp_replace(c, "[class]", ""))`
+  * and `size(split(c, "\n", -1))`.
+  *
+  * Known whitespace divergence: `wsCount` (and so `punctCount`) counts
+  * Java regex `\s`, which includes U+000B (vertical tab); the DuckDB
+  * oracle's `[\s]` is RE2's, which excludes it. The q14/q15/q17 oracles
+  * therefore agree only on text without U+000B; `TextFunctionsSpec` pins
+  * the engine's side.
   */
 object TextFunctions {
+
+  import graft.plans.AsciiClassCount.{Digit, Letter, Newline, Space}
+  import graft.plans.GraftFunctions.asciiClassCount
 
   /** Whitespace-token count (0 for blank). */
   def tokenCount(c: Column): Column =
     when(length(trim(c)) === 0, lit(0)).otherwise(size(split(trim(c), "\\s+")))
 
-  /** Count of chars matching an ASCII class, via length difference (codegen,
-    * no regexp_count needed). `classRe` is a character class like "A-Za-z". */
-  def classCount(c: Column, classRe: String): Column =
-    length(c) - length(regexp_replace(c, s"[$classRe]", ""))
-
-  def letterCount(c: Column): Column = classCount(c, "A-Za-z")
-  def digitCount(c: Column): Column = classCount(c, "0-9")
-  def wsCount(c: Column): Column = classCount(c, "\\s")
-  /** punct = total - letters - digits - whitespace (reference definition). */
+  def letterCount(c: Column): Column = asciiClassCount(c, Letter)
+  def digitCount(c: Column): Column = asciiClassCount(c, Digit)
+  def wsCount(c: Column): Column = asciiClassCount(c, Space)
+  /** punct = total - letters - digits - whitespace (reference definition),
+    * in one scan. */
   def punctCount(c: Column): Column =
-    length(c) - letterCount(c) - digitCount(c) - wsCount(c)
+    asciiClassCount(c, Letter | Digit | Space, invert = true)
 
-  def lineCount(c: Column): Column = size(split(c, "\n", -1))
+  /** Lines as `\n`-separated pieces: newlines + 1 (1 for ""). Null for
+    * null, as `size(split(..))` under ANSI mode (Spark 4's default); the
+    * split form gave -1 with `spark.sql.ansi.enabled=false`. */
+  def lineCount(c: Column): Column = asciiClassCount(c, Newline) + 1
 
   /** BPE-style pretokenizer regex (GPT-2-shaped, ASCII, RE2-compatible —
     * no lookahead so the DuckDB oracle counts the same matches): English
@@ -58,16 +71,6 @@ object TextFunctions {
     when(length(trim(c)) === 0, lit(0))
       .otherwise(size(filter(words, w => w.isInCollection(stopwords))))
   }
-
-  /** Stopword ratio over whitespace tokens (quality signal). */
-  def stopwordRatio(c: Column, stopwords: Seq[String] = Stopwords.toSeq): Column =
-    when(tokenCount(c) === 0, lit(0.0))
-      .otherwise(stopwordCount(c, stopwords).cast("double") / tokenCount(c))
-
-  /** Mean word length over whitespace tokens. */
-  def meanWordLen(c: Column): Column =
-    when(tokenCount(c) === 0, lit(0.0))
-      .otherwise(length(regexp_replace(c, "\\s", "")).cast("double") / tokenCount(c))
 
   /** Document fingerprint: md5 of whitespace-normalized lowercase text —
     * oracle-checkable exact-dup key (generalizes features.py:87-88's

@@ -29,25 +29,10 @@ final class BoundedMinHeap(val k: Int, val withPayload: Boolean) {
     if (withPayload) payloads = java.util.Arrays.copyOf(payloads, cap)
   }
 
-  @inline private def less(a: Int, b: Int): Boolean = keys(a) < keys(b)
-  @inline private def swap(a: Int, b: Int): Unit = {
-    val t = keys(a); keys(a) = keys(b); keys(b) = t
-    if (withPayload) { val p = payloads(a); payloads(a) = payloads(b); payloads(b) = p }
-  }
   private def siftUp(i0: Int): Unit = {
     var i = i0
-    while (i > 0 && less((i - 1) / 2, i)) { swap(i, (i - 1) / 2); i = (i - 1) / 2 }
-  }
-  private def siftDown(): Unit = {
-    var i = 0
-    var done = false
-    while (!done) {
-      val l = 2 * i + 1
-      val r = 2 * i + 2
-      var m = i
-      if (l < size && less(m, l)) m = l
-      if (r < size && less(m, r)) m = r
-      if (m == i) done = true else { swap(i, m); i = m }
+    while (i > 0 && keys((i - 1) / 2) < keys(i)) {
+      BoundedMinHeap.swap(keys, payloads, i, (i - 1) / 2); i = (i - 1) / 2
     }
   }
 
@@ -62,7 +47,7 @@ final class BoundedMinHeap(val k: Int, val withPayload: Boolean) {
     } else if (key < keys(0)) {
       keys(0) = key
       if (withPayload) payloads(0) = payload
-      siftDown()
+      BoundedMinHeap.siftDown(keys, payloads, size)
     }
   }
 
@@ -74,11 +59,18 @@ final class BoundedMinHeap(val k: Int, val withPayload: Boolean) {
     }
   }
 
-  /** (sorted-ascending keys, payloads in the same order). */
+  /** (sorted-ascending keys, payloads in the same order): heapsort of a
+    * copy — the copy is already a max-heap, so repeatedly moving its max
+    * to the back sorts it on primitives, with no boxing. */
   def sorted(): (Array[Long], Array[Long]) = {
-    val idx = (0 until size).sortBy(keys(_)).toArray
-    val ks = idx.map(keys(_))
-    val ps = if (withPayload) idx.map(payloads(_)) else null
+    val ks = java.util.Arrays.copyOf(keys, size)
+    val ps = if (withPayload) java.util.Arrays.copyOf(payloads, size) else null
+    var end = size - 1
+    while (end > 0) {
+      BoundedMinHeap.swap(ks, ps, 0, end)
+      BoundedMinHeap.siftDown(ks, ps, end)
+      end -= 1
+    }
     (ks, ps)
   }
 
@@ -96,6 +88,27 @@ final class BoundedMinHeap(val k: Int, val withPayload: Boolean) {
 }
 
 object BoundedMinHeap {
+  /** Swap entries a and b of a key array and its (nullable) payloads. */
+  private def swap(ks: Array[Long], ps: Array[Long], a: Int, b: Int): Unit = {
+    val t = ks(a); ks(a) = ks(b); ks(b) = t
+    if (ps != null) { val p = ps(a); ps(a) = ps(b); ps(b) = p }
+  }
+
+  /** Restore the max-heap property of the first n entries after the root
+    * changed. */
+  private def siftDown(ks: Array[Long], ps: Array[Long], n: Int): Unit = {
+    var i = 0
+    var done = false
+    while (!done) {
+      val l = 2 * i + 1
+      val r = 2 * i + 2
+      var m = i
+      if (l < n && ks(m) < ks(l)) m = l
+      if (r < n && ks(m) < ks(r)) m = r
+      if (m == i) done = true else { swap(ks, ps, i, m); i = m }
+    }
+  }
+
   def deserialize(bytes: Array[Byte], k: Int, withPayload: Boolean): BoundedMinHeap = {
     val h = new BoundedMinHeap(k, withPayload)
     val bb = java.nio.ByteBuffer.wrap(bytes)

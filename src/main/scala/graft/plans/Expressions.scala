@@ -143,6 +143,71 @@ object HasAsciiLetter {
   }
 }
 
+/** Count of code points in an ASCII character class, as one compiled
+  * byte scan — the kernel of the SQL-path quality counters
+  * (`TextFunctions.letterCount` and friends), value-identical to
+  * `length(c) - length(regexp_replace(c, "[class]", ""))` without a regex
+  * pass and a string copy per class per row. `mask` is a union of the
+  * class bits below; with `invert` the count is of the code points
+  * OUTSIDE the class (punct = total - letters - digits - whitespace, one
+  * scan). Exact for valid UTF-8 for the same reason as `HasAsciiLetter`:
+  * bytes 0x00–0x7F appear only as the ASCII characters themselves, and
+  * every code point has exactly one non-continuation byte (what
+  * `length`, i.e. `numChars`, counts). */
+case class AsciiClassCount(child: Expression, mask: Int, invert: Boolean)
+    extends UnaryExpression {
+
+  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
+    if (child.dataType == StringType) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
+    else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
+      s"ascii_class_count requires a string column, got ${child.dataType}")
+  override def dataType: DataType = IntegerType
+  override def prettyName: String = "ascii_class_count"
+
+  override def nullSafeEval(input: Any): Any =
+    AsciiClassCount.count(input.asInstanceOf[UTF8String], mask, invert)
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, c =>
+      s"${ev.value} = graft.plans.AsciiClassCount.count($c, $mask, $invert);")
+
+  override protected def withNewChildInternal(newChild: Expression): AsciiClassCount =
+    copy(child = newChild)
+}
+
+object AsciiClassCount {
+  final val Letter = 1  // [A-Za-z]
+  final val Digit = 2   // [0-9]
+  final val Space = 4   // Java regex \s: [ \t\n\x0B\f\r]
+  final val Newline = 8 // \n
+
+  private val classBits: Array[Byte] = {
+    val t = new Array[Byte](128)
+    for (ch <- 'A' to 'Z') t(ch) = Letter.toByte
+    for (ch <- 'a' to 'z') t(ch) = Letter.toByte
+    for (ch <- '0' to '9') t(ch) = Digit.toByte
+    for (ch <- " \t\u000b\f\r") t(ch) = Space.toByte
+    t('\n') = (Space | Newline).toByte
+    t
+  }
+
+  def count(s: UTF8String, mask: Int, invert: Boolean): Int = {
+    val n = s.numBytes()
+    var hits = 0
+    var chars = 0
+    var i = 0
+    while (i < n) {
+      val b = s.getByte(i)
+      if (b >= 0) {
+        chars += 1
+        if ((classBits(b) & mask) != 0) hits += 1
+      } else if ((b & 0xC0) != 0x80) chars += 1
+      i += 1
+    }
+    if (invert) chars - hits else hits
+  }
+}
+
 /** Double dot product of two float-array columns — the candidate-pair
   * cosine verify kernel (`Ann.cosineDupPairs` / `Ann.semDedup`). One
   * static call into a JIT-compiled loop (`VecKernels.dotFF`,

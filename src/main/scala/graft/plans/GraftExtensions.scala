@@ -40,6 +40,12 @@ object GraftFunctions {
   def hasAsciiLetter(text: Column): Column =
     ExpressionUtils.column(HasAsciiLetter(ExpressionUtils.expression(text)))
 
+  /** Column API for the compiled ASCII char-class count (`mask` from the
+    * `AsciiClassCount` class bits; `invert` counts the code points
+    * outside the class). */
+  def asciiClassCount(text: Column, mask: Int, invert: Boolean = false): Column =
+    ExpressionUtils.column(AsciiClassCount(ExpressionUtils.expression(text), mask, invert))
+
   /** Column API for the compiled float-array dot product. */
   def vecDot(a: Column, b: Column): Column =
     ExpressionUtils.column(

@@ -74,7 +74,7 @@ class AggregatesSpec extends AnyFunSuite {
         val rws = df.groupBy("band", "bucket")
           .agg(GraftFunctions.smallestKLongs(F.col("id"), 50).as("__ids"))
           .select(F.explode(F.col("__ids")).as("id")).collect()
-        Thread.sleep(500)
+        org.apache.spark.ListenerBusSync.drain(spark.sparkContext)
         rws
       } finally spark.sparkContext.removeSparkListener(listener)
     assert(kept.map(_.getLong(0)).toSeq.sorted == (0L until 50L).toSeq)
@@ -99,6 +99,21 @@ class AggregatesSpec extends AnyFunSuite {
     }
     want.foreach { case (b, ids) =>
       assert(got(b) == ids, s"bucket $b: got ${got(b)}, want $ids")
+    }
+  }
+
+  test("BoundedMinHeap.sorted: the k smallest keys ascending, each with its payload") {
+    val r = new java.util.Random(5L)
+    for (k <- Seq(1, 2, 7, 64); n <- Seq(0, 1, k - 1, k, 3 * k + 5)) {
+      // distinct keys spanning the whole long range, payload derived from key
+      val keys = Iterator.continually(r.nextLong()).distinct
+        .take(n).toSeq ++ (if (n > 2) Seq(Long.MinValue, Long.MaxValue) else Nil)
+      val h = new BoundedMinHeap(k, withPayload = true)
+      keys.foreach(key => h.insert(key, ~key))
+      val (ks, ps) = h.sorted()
+      val want = keys.sorted.take(k)
+      assert(ks.toSeq == want, s"k=$k n=$n")
+      assert(ps.toSeq == want.map(~_), s"k=$k n=$n payloads")
     }
   }
 }
