@@ -204,8 +204,6 @@ object Dedup {
       .select("__row.*")
   }
 
-  private val minhashUdf =
-    F.udf((text: String, w: Int, k: Int) => minhashSignature(text, w, k))
   private val simhashUdf = F.udf((text: String) => simhash(text))
   // emits SORTED-DISTINCT arrays: set semantics are what every consumer
   // wants (minhash mins, decontaminate membership, Jaccard sets), and it
@@ -217,9 +215,6 @@ object Dedup {
   // inputs come from shinglesUdf, so the sorted-distinct precondition holds
   private val jaccardHashesUdf =
     F.udf((a: Array[Long], b: Array[Long]) => jaccardOfSortedDistinct(a, b))
-
-  def withMinhash(df: DataFrame, textCol: String, w: Int = 3, k: Int = 32): DataFrame =
-    df.withColumn("minhash", minhashUdf(F.col(textCol), F.lit(w), F.lit(k)))
 
   def withSimhash(df: DataFrame, textCol: String): DataFrame =
     df.withColumn("simhash", simhashUdf(F.col(textCol)))
@@ -886,20 +881,10 @@ object Dedup {
     * one id-keyed window — intervals have fixed width `w`, so the union
     * size is sum(min(w, nextPos - pos)), no fold state. The window's
     * id-partitioning is reused by the final per-doc sum (no extra
-    * exchange).
-    *
-    * Gram-count tier (the q71 bloom pattern — hash prefilter, EXACT
-    * confirm): the dominant shuffle used to move every gram as its full
-    * ~8-word STRING into the count aggregate. Counting now runs on
-    * xxhash64(gram) — 8 bytes per key, ~6× fewer shuffle bytes — and
-    * only grams whose HASH count clears `minCount` (a superset of the
-    * truly duplicated grams: hash count >= string count, no false
-    * negatives) are re-counted by EXACT string to confirm. A hash
-    * collision can only promote a gram into the (small) confirm set,
-    * where the exact count rejects it — results are identical to the
-    * all-strings count by construction, so the exact-substring stance
-    * (`dropBoilerplateLines`) is preserved without shuffling the gram
-    * text of the (overwhelmingly non-duplicated) corpus.
+    * exchange). Grams shuffle as STRINGS: the count key must be the
+    * exact gram because the gate is exact-substring semantics (the
+    * `dropBoilerplateLines` stance — a 64-bit gram hash would save key
+    * bytes at an n²/2⁶⁴ false-dup risk and break the bit-exact oracle).
     *
     * Output: `idCol`, `n_words`, `dup_tokens` (positions covered),
     * `dup_span_frac` = dup_tokens/n_words (0.0 for docs under `w`
@@ -916,13 +901,7 @@ object Dedup {
         F.transform(F.sequence(F.lit(0), F.col("__n") - w),
           i => F.array_join(F.slice(F.col("__ws"), i + 1, F.lit(w)), " ")))
         .as(Seq("__pos", "__g")))
-    val dupHashes = grams.select(F.xxhash64(F.col("__g")).as("__gh"))
-      .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
-      .filter(F.col("__hc") >= minCount)
-      .select("__gh")
-    val dupGrams = grams.select(F.col("__g"), F.xxhash64(F.col("__g")).as("__gh"))
-      .join(dupHashes, Seq("__gh"), "left_semi")
-      .groupBy("__g")
+    val dupGrams = grams.groupBy("__g")
       .agg(F.count(F.lit(1)).as("__c"))
       .filter(F.col("__c") >= minCount)
       .select("__g")
@@ -961,11 +940,8 @@ object Dedup {
     * starts into per-position coverage via max over RANGE [pos-w+1, pos]
     * (closed form — never an explode of the w covered positions per
     * start); the rebuild groupBy reuses the window's id partitioning.
-    * Gram counting uses the hash-prefilter + exact-string-confirm tier
-    * (the `dupSpanStats` note): 8-byte xxhash64 keys through the
-    * dominant count shuffle, exact confirm on the (small) hash-dup
-    * superset — results identical by construction. Integer counts and
-    * byte-exact rebuilt text — SQL-reproducible (q84). */
+    * Grams shuffle as exact strings (the `dupSpanStats` stance). Integer
+    * counts and byte-exact rebuilt text — SQL-reproducible (q84). */
   def dropDupSpans(docs: DataFrame, textCol: String, idCol: String,
                    w: Int = 8, minCount: Long = 2): DataFrame = {
     require(w >= 2, s"gram width w must be >= 2, got $w")
@@ -985,14 +961,7 @@ object Dedup {
       .select(F.col(idCol), F.posexplode(F.col("__zip")).as(Seq("__pos", "__t")))
       .select(F.col(idCol), F.col("__pos"),
         F.col("__t").getField("w").as("__w"), F.col("__t").getField("g").as("__g"))
-    val gramsOnly = tok.filter(F.col("__g").isNotNull)
-    val dupHashes = gramsOnly.select(F.xxhash64(F.col("__g")).as("__gh"))
-      .groupBy("__gh").agg(F.count(F.lit(1)).as("__hc"))
-      .filter(F.col("__hc") >= minCount)
-      .select("__gh")
-    val dupGrams = gramsOnly
-      .select(F.col("__g"), F.xxhash64(F.col("__g")).as("__gh"))
-      .join(dupHashes, Seq("__gh"), "left_semi")
+    val dupGrams = tok.filter(F.col("__g").isNotNull)
       .groupBy("__g").agg(F.count(F.lit(1)).as("__c"))
       .filter(F.col("__c") >= minCount)
       .select(F.col("__g"), F.lit(1).as("__d"))

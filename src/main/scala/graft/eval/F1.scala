@@ -84,20 +84,6 @@ object F1 {
     if (row.isNullAt(0)) 0.0 else row.getDouble(0)
   }
 
-  /** Binary keep/drop F1 treating `positive` as the positive class — the
-    * north-rule gate (F1 >= 0.99 on keep decisions). */
-  def binaryF1(df: DataFrame, labelCol: String, predCol: String): Double = {
-    val l = F.col(labelCol)
-    val p = F.col(predCol)
-    val r = df.agg(
-      F.sum(F.when(l && p, 1L).otherwise(0L)).as("tp"),
-      F.sum(F.when(!l && p, 1L).otherwise(0L)).as("fp"),
-      F.sum(F.when(l && !p, 1L).otherwise(0L)).as("fn"),
-    ).head()
-    val tp = r.getLong(0); val fp = r.getLong(1); val fn = r.getLong(2)
-    if (2 * tp + fp + fn == 0) 0.0 else 2.0 * tp / (2.0 * tp + fp + fn)
-  }
-
   /** A6: accuracy + confusion counts (actual, predicted, n). */
   def confusion(df: DataFrame, labelCol: String, predCol: String): DataFrame =
     df.groupBy(F.col(labelCol).as("actual"), F.col(predCol).as("predicted"))

@@ -149,14 +149,6 @@ object NGramLangId {
     total
   }
 
-  def totalNgrams(text: String, nMin: Int, nMax: Int): Int = {
-    if (text == null) return 0
-    var total = 0
-    var n = nMin
-    while (n <= nMax) { total += math.max(0, text.length - n + 1); n += 1 }
-    total
-  }
-
   /** Hashed n-gram counts of the lowercased text (bucket -> count). */
   def hashCounts(text0: String, numBuckets: Int, nMin: Int, nMax: Int): java.util.HashMap[Integer, Integer] = {
     val out = new java.util.HashMap[Integer, Integer]()

@@ -134,7 +134,4 @@ object LangIdModel {
       intercept = doubles(n.get("intercept")),
     )
   }
-
-  def fromFile(path: String): LangIdModel =
-    fromJson(new String(java.nio.file.Files.readAllBytes(java.nio.file.Paths.get(path)), "UTF-8"))
 }

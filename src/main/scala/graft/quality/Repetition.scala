@@ -29,7 +29,7 @@ import org.apache.spark.sql.{functions => F}
   *
   * Semantics are defined so a SQL engine reproduces them bit-exactly
   * (driver oracle): integer counts/sums, then ONE double division — see
-  * SparkEntry's q62 oracle SQL.
+  * the q62 oracle SQL in graft.queries.TextQualityQueries.
   */
 object Repetition {
 

@@ -38,18 +38,4 @@ object Rules {
       (letterRatio < MinLetterRatio) || (letterRatio > MaxLetterRatio) ||
       (punctRatio < MinPunctRatio) || (punctRatio > MaxPunctRatio) ||
       (digitRatio > MaxDigitRatio)
-
-  /** Additional graft quality signals for transcript turns: repetition
-    * (max repeated-line run / distinct-line ratio) and mean word length.
-    * These feed the quality score alongside the reference thresholds.
-    */
-  def repetitionRatio(text: String): Double = {
-    if (text == null || text.isEmpty) return 0.0
-    val lines = graft.text.PyText.splitLines(text).filter(graft.text.PyText.hasNonSpace)
-    if (lines.length < 2) return 0.0
-    val distinct = new java.util.HashSet[String]()
-    var i = 0
-    while (i < lines.length) { distinct.add(lines(i)); i += 1 }
-    1.0 - distinct.size.toDouble / lines.length
-  }
 }

@@ -84,7 +84,4 @@ object PyText {
     if (start < n) out += s.substring(start)
     out.toArray
   }
-
-  /** Python `len(s)` — number of codepoints. */
-  def cpLength(s: String): Int = s.codePointCount(0, s.length)
 }

@@ -20,8 +20,6 @@ final class TokenMatcher private (
     private val outputs: Array[Array[Int]],
 ) extends Serializable {
 
-  def numTokens: Int = tokens.length
-
   /** Presence bit per token, single pass over `text`. */
   def matchBits(text: String): Array[Boolean] = {
     val bits = new Array[Boolean](tokens.length)

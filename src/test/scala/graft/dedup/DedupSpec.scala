@@ -584,13 +584,12 @@ class DedupSpec extends AnyFunSuite {
         s"aggregation should bound this near the map-partition count, not $n)")
   }
 
-  test("dup-span gram counting: hash prefilter + exact confirm matches an all-strings count") {
+  test("dup-span coverage matches the all-strings reference count") {
     import spark.implicits._
     // randomized corpus with planted cross-doc and within-doc dup grams;
-    // the reference below is the former shape — count EVERY gram by its
-    // full string — and the shipped hash-prefiltered tier must match it
-    // row-for-row (no false negatives by construction; collisions only
-    // promote grams into the exact confirm, which rejects them)
+    // the reference below counts EVERY gram by its full string through
+    // interpreted column lambdas, and dupSpanStats must match it
+    // row-for-row — the reference any replacement gram kernel is held to
     val r = new java.util.Random(7L)
     val vocab = (0 until 200).map(i => s"t$i")
     val phrase = (0 until 8).map(i => s"dup$i").mkString(" ")
@@ -600,8 +599,8 @@ class DedupSpec extends AnyFunSuite {
     }.toDF("id", "text")
     val got = Dedup.dupSpanStats(docs, "text", "id", w = 8)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2))).toSet
-    // reference: the pre-hash-tier all-strings count feeding the same
-    // closed-form coverage
+    // reference: the all-strings count feeding the same closed-form
+    // coverage
     val ws = F.filter(F.split(F.lower(F.col("text")), "\\s+"), x => x =!= "")
     val base = docs.select(F.col("id"), ws.as("__ws"))
       .select(F.col("id"), F.col("__ws"), F.size(F.col("__ws")).as("__n"))
